@@ -2903,8 +2903,8 @@ object SparkEntry {
     "hist_eqwidth10_extendedprice" ->
       eqWidthSql("lineitem", "l_extendedprice", 10, None, histSelect),
 
-    // same contract as hist_eqwidth10 — the one-pass typed aggregate must be
-    // indistinguishable from the groupBy formulation
+    // same contract as hist_eqwidth10 — histogramOnePass delegates to the
+    // same HistogramAgg plan
     "hist_onepass_extendedprice" ->
       eqWidthSql("lineitem", "l_extendedprice", 10, None, histSelect),
 

@@ -21,14 +21,23 @@ object Bins {
 
 /** Distributed histogram core.
   *
-  * Design (SURVEY.md §3/§4): everything stays in the DataFrame world — the
-  * scan is vectorized parquet, the null/range filter and the bin expression
-  * are codegen'd `Column`s, counting is one `groupBy(bin_id).count()` (hash
-  * aggregate, partial+final, shuffle of at most n_bins × n_series rows), and
-  * the dense-bin fill is a broadcast join against a tiny spine. Two Spark
-  * jobs total regardless of series count: one combined min/max agg, one
-  * counting job. This shape is scale-invariant: at 100 TB the scan dominates
-  * and both passes are embarrassingly parallel with O(n_bins) shuffle.
+  * Design (SURVEY.md §3/§4): everything stays in the DataFrame world. Every
+  * count-based histogram — [[histogram]] (bin count, explicit edges or
+  * explicit range), [[histogramLog]], [[histogramManyBins]] /
+  * [[Histogram.build]], [[histogramColumns]] and [[histogramByGroup]] — runs
+  * on ONE plan: a [[graft.functions.HistogramAgg]] aggregate (a dense
+  * per-partition count vector merged element-wise, the rdd.py:2347-2366
+  * shape inside Spark) → `posexplode` → bin edges echoed from the
+  * driver-side edge vector with `element_at(typedLit(edges))` → `orderBy`.
+  * The aggregate itself drops null, NaN and out-of-range values, so no
+  * filter, spine join or per-call constant sits in the plan: edge arrays
+  * are reference literals, and the generated code is reused across calls.
+  *
+  * Measured shape under AQE: each global aggregate is 2 Spark jobs, so a
+  * histogram with a data-derived range (min/max aggregate, then the
+  * counting aggregate) is 4 jobs, and one with explicit edges or an
+  * explicit range is 2 — for any number of series or columns. The grouped
+  * histogram adds its shuffle and the range-partitioned sort.
   */
 object Binning {
 
@@ -62,13 +71,17 @@ object Binning {
   /** Equal-width edges: `[i*inc + lo for i in 0 until n] :+ hi` — the last
     * edge is the exact max, absorbing float error (rdd.py:2311-2312). The
     * integer-width nicety (rdd.py:2306-2309) is automatic in IEEE doubles:
-    * when (hi-lo) is an integer divisible by n, (hi-lo)/n is exact. */
+    * when (hi-lo) is an integer divisible by n, (hi-lo)/n is exact.
+    * Degenerate `lo == hi` or `n == 1` is the single closed bucket
+    * `[lo, hi]` (rdd.py:2295-2296); otherwise an infinite width is refused
+    * (rdd.py:2300-2301) — an infinite bound, or a span that overflows. */
   def equalWidthEdges(lo: Double, hi: Double, n: Int): Vector[Double] = {
     require(n >= 1, "bins must be >= 1")
     require(!lo.isNaN && !hi.isNaN && lo <= hi, s"invalid range [$lo, $hi]")
     if (lo == hi || n == 1) Vector(lo, hi)
     else {
       val inc = (hi - lo) / n
+      require(!inc.isInfinite, "Can not generate buckets with infinite value")
       (0 until n).map(i => i * inc + lo).toVector :+ hi
     }
   }
@@ -88,7 +101,9 @@ object Binning {
     steps.max - steps.min < 1e-10
   }
 
-  /** Bin-id expression for a value column against fixed edges.
+  /** Bin-id expression for a value column against fixed edges, for the
+    * row-level formulations ([[histogram2d]], [[histogramWeighted]],
+    * streaming).
     *
     * Even widths (rdd.py:2352-2354 fast path):
     *   `least(floor((x - lo) / step), n-1)` — the `least` clamp folds the
@@ -113,26 +128,51 @@ object Binning {
     }
   }
 
-  /** Null/NaN/range filter (rdd.py:2275-2282, 2350-2351). */
+  /** Null/NaN filter (rdd.py:2275-2282) — what a data-derived range is
+    * resolved over. */
   private def cleaned(df: DataFrame, colName: String): DataFrame =
     df.select(col(colName).cast("double").as("x"))
       .where(col("x").isNotNull && !isnan(col("x")))
 
-  /** bin_lo / bin_hi expressions for even-width bins, written so the exact
-    * same arithmetic is expressible in the DuckDB oracle (bit-identical
-    * doubles): lo_i = i*step + lo; hi_i = hi for the last bin else
-    * (i+1)*step + lo. */
-  private def evenEdgeCols(binId: Column, lo: Double, hi: Double, n: Int): (Column, Column) = {
-    val step = (hi - lo) / n
-    val binLo = binId * lit(step) + lit(lo)
-    val binHi = when(binId === lit(n - 1), lit(hi)).otherwise((binId + lit(1)) * lit(step) + lit(lo))
-    (binLo.as("bin_lo"), binHi.as("bin_hi"))
-  }
-
-  /** Dense spine of bin ids 0..n-1 (tiny; the post-agg join against it is a
-    * broadcast over at most n rows — never a scale concern). */
+  /** Dense spine of bin ids 0..n-1 for the row-level formulations (tiny;
+    * the post-agg join against it is a broadcast over at most n rows). */
   private def spine(df: DataFrame, n: Int): DataFrame =
     df.sparkSession.range(n).select(col("id").cast("int").as("bin_id"))
+
+  /** Edges of a [[Bins]] spec: explicit edges are validated and win over
+    * `range`; a bin count spans `range`, else the data's min/max over the
+    * value column `x` of `clean`. */
+  private def edgesOf(clean: DataFrame, bins: Bins, range: Option[(Double, Double)]): Vector[Double] =
+    bins match {
+      case Bins.Edges(es) => validateEdges(es); es.toVector
+      case Bins.Count(n) =>
+        val (lo, hi) = range.getOrElse(minMaxOf(clean))
+        equalWidthEdges(lo, hi, n)
+    }
+
+  /** `bin_lo` / `bin_hi` of bin `b`, echoed from the edge vector. For
+    * equal-width edges this is bit-identical to the oracle's
+    * `i*step + lo` arithmetic, because [[equalWidthEdges]] computes exactly
+    * that on the driver. */
+  private def edgeCols(b: Column, es: Vector[Double],
+                       loName: String = "bin_lo", hiName: String = "bin_hi"): Seq[Column] = Seq(
+    element_at(typedLit(es.dropRight(1)), b + 1).as(loName),
+    element_at(typedLit(es.drop(1)), b + 1).as(hiName))
+
+  /** The counting plan: one global aggregate of one count vector per
+    * `(value, output name)` pair, exploded to dense sorted rows
+    * `(bin_id, bin_lo, bin_hi, <name> ...)`. */
+  private def vectorHistogram(df: DataFrame, es: Vector[Double],
+                              series: Seq[(Column, String)]): DataFrame = {
+    val aggs = series.zipWithIndex.map { case ((x, _), i) =>
+      graft.functions.HistogramAgg.hist_counts(x, es).as(s"c$i")
+    }
+    df.agg(aggs.head, aggs.tail: _*)
+      .select(posexplode(arrays_zip(series.indices.map(i => col(s"c$i")): _*)).as(Seq("bin_id", "z")))
+      .select(Seq(col("bin_id").cast("int").as("bin_id")) ++ edgeCols(col("bin_id"), es) ++
+        series.indices.map(i => col("z").getField(s"c$i").as(series(i)._2)): _*)
+      .orderBy("bin_id")
+  }
 
   /** Histogram of one numeric column. Returns a dense, sorted DataFrame
     * `(bin_id, bin_lo, bin_hi, cnt)`.
@@ -145,20 +185,11 @@ object Binning {
   def histogram(df: DataFrame, colName: String, bins: Bins = Bins.Count(10),
                 range: Option[(Double, Double)] = None): DataFrame = {
     val clean = cleaned(df, colName)
-    bins match {
-      case Bins.Edges(es) =>
-        validateEdges(es)
-        histogramWithEdges(clean, es.toVector)
-      case Bins.Count(n) =>
-        val (lo, hi) = range.getOrElse(minMaxOf(clean))
-        require(lo <= hi, s"invalid range [$lo, $hi]")
-        if (lo == hi || n == 1) singleBucket(clean, lo, hi)
-        else evenHistogram(clean, lo, hi, n)
-    }
+    vectorHistogram(clean, edgesOf(clean, bins, range), Seq(col("x") -> "cnt"))
   }
 
-  /** One combined min/max job (SURVEY.md §3 design target: the reference ran
-    * 2 collect jobs per series; we run 1 total). */
+  /** One combined min/max aggregate, 2 jobs under AQE (SURVEY.md §3 design
+    * target: the reference ran 2 collect jobs per series). */
   private[dist] def minMaxOf(clean: DataFrame): (Double, Double) = {
     val r = clean.agg(min("x"), max("x")).head()
     if (r.isNullAt(0))
@@ -166,120 +197,36 @@ object Binning {
     (r.getDouble(0), r.getDouble(1))
   }
 
-  private def evenHistogram(clean: DataFrame, lo: Double, hi: Double, n: Int): DataFrame = {
-    val inRange = clean.where(col("x") >= lit(lo) && col("x") <= lit(hi))
-    val counts = inRange
-      .groupBy(binId(col("x"), equalWidthEdges(lo, hi, n)).as("bin_id"))
-      .agg(count(lit(1)).as("cnt"))
-    val (binLo, binHi) = evenEdgeCols(col("bin_id"), lo, hi, n)
-    spine(clean, n).join(counts, Seq("bin_id"), "left")
-      .na.fill(0L, Seq("cnt"))
-      .select(col("bin_id"), binLo, binHi, col("cnt"))
-      .orderBy("bin_id")
-  }
-
-  private def histogramWithEdges(clean: DataFrame, es: Vector[Double]): DataFrame = {
-    val n = es.size - 1
-    val inRange = clean.where(col("x") >= lit(es.head) && col("x") <= lit(es.last))
-    val counts = inRange
-      .groupBy(binId(col("x"), es).as("bin_id"))
-      .agg(count(lit(1)).as("cnt"))
-    val loArr = typedLit(es.dropRight(1))
-    val hiArr = typedLit(es.drop(1))
-    spine(clean, n).join(counts, Seq("bin_id"), "left")
-      .na.fill(0L, Seq("cnt"))
-      .select(col("bin_id"),
-        element_at(loArr, col("bin_id") + 1).as("bin_lo"),
-        element_at(hiArr, col("bin_id") + 1).as("bin_hi"),
-        col("cnt"))
-      .orderBy("bin_id")
-  }
-
-  /** Degenerate single bucket [lo, hi] counting all in-range values
-    * (rdd.py:2295-2296). */
-  private def singleBucket(clean: DataFrame, lo: Double, hi: Double): DataFrame =
-    clean.where(col("x") >= lit(lo) && col("x") <= lit(hi))
-      .agg(count(lit(1)).as("cnt"))
-      .select(lit(0).cast("int").as("bin_id"), lit(lo).as("bin_lo"), lit(hi).as("bin_hi"), col("cnt"))
-
-  /** Single-pass histogram: identical output contract to [[histogram]], but
-    * counting runs as one [[graft.functions.HistogramAgg]] typed aggregate —
-    * a dense per-partition count vector merged element-wise (the
-    * rdd.py:2347-2366 distributed shape inside Tungsten). No per-row shuffle,
-    * no spine join: the shuffle carries ONE n_bins-long vector per partition,
-    * the minimum possible traffic. Data-derived ranges still take the
-    * min/max pre-pass (unavoidable; SURVEY.md §4). */
+  /** The single-pass histogram — since every histogram runs the one
+    * [[graft.functions.HistogramAgg]] plan, the same as [[histogram]]. */
   def histogramOnePass(df: DataFrame, colName: String, bins: Bins = Bins.Count(10),
-                       range: Option[(Double, Double)] = None): DataFrame = {
-    val clean = cleaned(df, colName)
-    val es: Vector[Double] = bins match {
-      case Bins.Edges(e) => validateEdges(e); e.toVector
-      case Bins.Count(n) =>
-        val (lo, hi) = range.getOrElse(minMaxOf(clean))
-        require(lo <= hi, s"invalid range [$lo, $hi]")
-        equalWidthEdges(lo, hi, n)
-    }
-    if (es.head == es.last) return singleBucket(clean, es.head, es.last) // min==max degenerate
-    // range predicate stays in the plan for parquet pushdown; the aggregate
-    // re-checks (and drops) out-of-range values regardless
-    val inRange = clean.where(col("x") >= lit(es.head) && col("x") <= lit(es.last))
-    inRange.agg(graft.functions.HistogramAgg.hist_counts(col("x"), es).as("cnts"))
-      .select(posexplode(col("cnts")).as(Seq("bin_id", "cnt")))
-      .select(col("bin_id").cast("int").as("bin_id"),
-        element_at(typedLit(es.dropRight(1)), col("bin_id") + 1).as("bin_lo"),
-        element_at(typedLit(es.drop(1)), col("bin_id") + 1).as("bin_hi"),
-        col("cnt"))
-      .orderBy("bin_id")
-  }
+                       range: Option[(Double, Double)] = None): DataFrame =
+    histogram(df, colName, bins, range)
 
   /** Multi-series histogram with a SHARED range across all series — the
     * reference's only cross-series interaction (global min of mins / max of
     * maxes unless `range=` given; pyspark_dist_explore.py ~L100-118).
-    *
-    * One tagged union → one min/max agg job → one counting job with
-    * `pivot(series)` (explicit value list for deterministic column order).
     * Output: (bin_id, bin_lo, bin_hi, <label>_cnt ...), dense, sorted.
     */
   def histogramMany(series: Seq[(DataFrame, String, String)], n: Int = 10,
                     range: Option[(Double, Double)] = None): DataFrame =
     histogramManyBins(series, Bins.Count(n), range)
 
-  /** [[histogramMany]] generalized to any [[Bins]] spec (explicit edges skip
-    * the min/max job entirely, mirroring the reference's `bins=list`). */
+  /** [[histogramMany]] generalized to any [[Bins]] spec. The series are
+    * tagged and unioned; one min/max aggregate (skipped for explicit edges
+    * or range, mirroring the reference's `bins=list`) and one counting
+    * aggregate holding one `hist_counts(when(series = label, x))` vector
+    * per series: 4 jobs for any number of series, 2 without the min/max. */
   def histogramManyBins(series: Seq[(DataFrame, String, String)], bins: Bins,
                         range: Option[(Double, Double)] = None): DataFrame = {
     require(series.nonEmpty, "at least one series required")
     val labels = dedupeLabels(series.map(_._3))
-    val tagged = series.zip(labels).map { case ((df, c, _), lbl) =>
+    val clean = series.zip(labels).map { case ((df, c, _), lbl) =>
       df.select(col(c).cast("double").as("x"), lit(lbl).as("series"))
     }.reduce(_ unionByName _)
-    val clean = tagged.where(col("x").isNotNull && !isnan(col("x")))
-    val es: Vector[Double] = bins match {
-      case Bins.Edges(e) => validateEdges(e); e.toVector
-      case Bins.Count(nn) =>
-        val (lo, hi) = range.getOrElse(minMaxOf(clean))
-        require(lo <= hi, s"invalid range [$lo, $hi]")
-        equalWidthEdges(lo, hi, nn)
-    }
-    val (lo, hi) = (es.head, es.last)
-    val nb = es.size - 1
-    val inRange = clean.where(col("x") >= lit(lo) && col("x") <= lit(hi))
-    val counts = inRange
-      .groupBy(binId(col("x"), es).as("bin_id"))
-      .pivot("series", labels)
-      .count()
-    val cntCols = labels.map(l => coalesce(col(s"`$l`"), lit(0L)).as(s"${l}_cnt"))
-    // user-supplied edges are echoed back verbatim (element_at literals);
-    // derived edges keep the oracle-parity even-width arithmetic
-    val (binLo, binHi) = bins match {
-      case Bins.Edges(_) =>
-        (element_at(typedLit(es.dropRight(1)), col("bin_id") + 1).as("bin_lo"),
-          element_at(typedLit(es.drop(1)), col("bin_id") + 1).as("bin_hi"))
-      case _ => evenEdgeCols(col("bin_id"), lo, hi, nb)
-    }
-    spine(clean, nb).join(counts, Seq("bin_id"), "left")
-      .select(Seq(col("bin_id"), binLo, binHi) ++ cntCols: _*)
-      .orderBy("bin_id")
+      .where(col("x").isNotNull && !isnan(col("x")))
+    vectorHistogram(clean, edgesOf(clean, bins, range),
+      labels.map(l => when(col("series") === l, col("x")) -> s"${l}_cnt"))
   }
 
   /** Multi-column histogram over ONE frame in ONE scan: the reference's
@@ -287,7 +234,7 @@ object Binning {
     * range; here all N columns ride a single pass — one combined min/max agg
     * (shared lo/hi = min of mins / max of maxes), then one aggregate
     * producing a dense [[graft.functions.HistogramAgg]] count vector per
-    * column. Two jobs total for any N (SURVEY.md §3 target), N× fewer scans
+    * column: 4 jobs for any N (2 with an explicit range), N× fewer scans
     * than the union formulation. Output: (bin_id, bin_lo, bin_hi,
     * <col>_cnt ...), dense, sorted. */
   def histogramColumns(df: DataFrame, cols: Seq[String], n: Int = 10,
@@ -308,28 +255,8 @@ object Binning {
         throw new IllegalArgumentException("can not generate buckets from empty RDD")
       (r.getDouble(0), r.getDouble(1))
     }
-    require(lo <= hi, s"invalid range [$lo, $hi]")
-    val es = equalWidthEdges(lo, hi, n)
-    val nb = es.size - 1
-    if (lo == hi) { // degenerate: one closed bucket [v, v] per column
-      val aggs = cols.zip(xs).map { case (c, x) =>
-        count(when(!isnan(x) && x === lit(lo), 1)).as(s"${c}_cnt")
-      }
-      return df.agg(aggs.head, aggs.tail: _*)
-        .select(Seq(lit(0).cast("int").as("bin_id"), lit(lo).as("bin_lo"), lit(hi).as("bin_hi")) ++
-          cols.map(c => col(s"${c}_cnt")): _*)
-    }
-    val aggs = cols.zip(xs).map { case (c, x) =>
-      // null/NaN/out-of-range drops happen inside the aggregate (rdd.py:2350)
-      graft.functions.HistogramAgg.hist_counts(x, es).as(s"__cnts_$c")
-    }
-    val (binLo, binHi) = evenEdgeCols(col("bin_id"), lo, hi, nb)
-    val cntCols = cols.map(c => col("col").getField(s"__cnts_$c").as(s"${c}_cnt"))
-    df.agg(aggs.head, aggs.tail: _*)
-      .select(posexplode(arrays_zip(cols.map(c => col(s"__cnts_$c")): _*)))
-      .select(Seq(col("pos").cast("int").as("bin_id")) ++ cntCols: _*)
-      .select(Seq(col("bin_id"), binLo, binHi) ++ cols.map(c => col(s"${c}_cnt")): _*)
-      .orderBy("bin_id")
+    // null/NaN/out-of-range drops happen inside the aggregate (rdd.py:2350)
+    vectorHistogram(df, equalWidthEdges(lo, hi, n), xs.zip(cols.map(c => s"${c}_cnt")))
   }
 
   /** Duplicate series names get " (k)" suffixes, mirroring the reference's
@@ -337,7 +264,7 @@ object Binning {
   private[dist] def dedupeLabels(names: Seq[String]): Seq[String] = {
     // re-check each candidate against everything issued so far: a naive
     // per-name counter can emit a suffix colliding with a USER-SUPPLIED
-    // label (e.g. "a", "a (1)", "a" -> two "a (1)" pivot columns)
+    // label (e.g. "a", "a (1)", "a" -> two "a (1)" output columns)
     val seen = scala.collection.mutable.Set.empty[String]
     names.map { nm =>
       var cand = nm
@@ -349,35 +276,21 @@ object Binning {
   }
 
   /** Grouped histogram: shared global range over the whole column, counts per
-    * (group, bin). Dense over distinct-groups × bins.
+    * (group, bin). Dense over non-null groups × bins.
     *
-    * Counting is one [[graft.functions.HistogramAgg]] vector per group — the
+    * Counting is one [[graft.functions.HistogramAgg]] vector per group over
+    * every row with a non-null group — the aggregate drops null, NaN and
+    * out-of-range values itself, so a group whose values all drop still
+    * gets its all-zero vector, with no distinct-group scan or join. The
     * shuffle carries n_groups fixed-width count vectors instead of
-    * n_groups × n_bins rows, and dense bins come free from the buffer (a
-    * group with zero in-range rows is back-filled with a literal zero
-    * vector), so no bins-spine cross join is needed. */
+    * n_groups × n_bins rows. */
   def histogramByGroup(df: DataFrame, valueCol: String, groupCol: String, n: Int = 10,
                        range: Option[(Double, Double)] = None): DataFrame = {
-    val clean = df.select(col(groupCol).as("grp"), col(valueCol).cast("double").as("x"))
-      .where(col("x").isNotNull && !isnan(col("x")))
-    val (lo, hi) = range.getOrElse(minMaxOf(clean))
-    val es = equalWidthEdges(lo, hi, n)
-    val nb = es.size - 1
-    if (lo == hi) { // degenerate: fall back to the row formulation
-      val counts = clean.where(col("x") === lit(lo))
-        .groupBy(col("grp")).agg(count(lit(1)).as("cnt"))
-        .select(col("grp"), lit(0).cast("int").as("bin_id"), col("cnt"))
-      return df.select(col(groupCol).as("grp")).where(col("grp").isNotNull).distinct()
-        .join(counts, Seq("grp"), "left").na.fill(0L, Seq("cnt"))
-        .select(col("grp").as(groupCol), coalesce(col("bin_id"), lit(0)).as("bin_id"), col("cnt"))
-        .orderBy(groupCol, "bin_id")
-    }
-    val counts = clean.where(col("x") >= lit(lo) && col("x") <= lit(hi))
+    val xs = df.select(col(groupCol).as("grp"), col(valueCol).cast("double").as("x"))
+    val (lo, hi) = range.getOrElse(minMaxOf(xs.where(col("x").isNotNull && !isnan(col("x")))))
+    xs.where(col("grp").isNotNull)
       .groupBy(col("grp"))
-      .agg(graft.functions.HistogramAgg.hist_counts(col("x"), es).as("cnts"))
-    val grpSpine = df.select(col(groupCol).as("grp")).where(col("grp").isNotNull).distinct()
-    grpSpine.join(counts, Seq("grp"), "left")
-      .withColumn("cnts", coalesce(col("cnts"), typedLit(Vector.fill(nb)(0L))))
+      .agg(graft.functions.HistogramAgg.hist_counts(col("x"), equalWidthEdges(lo, hi, n)).as("cnts"))
       .select(col("grp"), posexplode(col("cnts")).as(Seq("bin_id", "cnt")))
       .select(col("grp").as(groupCol), col("bin_id").cast("int").as("bin_id"), col("cnt"))
       .orderBy(groupCol, "bin_id")
@@ -402,8 +315,8 @@ object Binning {
     * histogram for heavy-tailed columns where equal-width bins put
     * everything in one bucket.
     *
-    * Two jobs, like the data-derived-range path: one quantile aggregate
-    * (n+1 doubles to the driver) and one counting pass. The exact
+    * Two aggregates, like the data-derived-range path: one quantile
+    * aggregate (n+1 doubles to the driver) and the counting one. The exact
     * percentile buffers the column per partition — at 100 TB compute edges
     * with `approx_percentile` instead (sketch tier, same downstream
     * binning); this is the oracle-checkable verifier tier. Fails fast if
@@ -470,7 +383,7 @@ object Binning {
     * the exact lo/hi (absorbing float error, as the even-width path does);
     * binning is the standard explicit-edges bisect. Non-positive values are
     * dropped with nulls/NaNs (log scale is undefined there — documented
-    * divergence from the linear drop rule). Same two-job shape as
+    * divergence from the linear drop rule). Same plan and job count as
     * [[histogram]]. */
   def histogramLog(df: DataFrame, colName: String, n: Int = 10,
                    range: Option[(Double, Double)] = None): DataFrame = {
@@ -478,15 +391,15 @@ object Binning {
     val clean = cleaned(df, colName).where(col("x") > 0)
     val (lo, hi) = range.getOrElse(minMaxOf(clean))
     require(lo > 0 && lo <= hi, s"log bins need 0 < lo <= hi, got [$lo, $hi]")
-    if (lo == hi || n == 1) return singleBucket(clean, lo, hi)
     val (llo, lhi) = (math.log(lo), math.log(hi))
-    val edges = (0 to n).map {
-      case 0 => lo
-      case `n` => hi
-      case i => math.exp(llo + i * (lhi - llo) / n)
-    }.toVector
-    validateEdges(edges)
-    histogramWithEdges(clean, edges)
+    val edges =
+      if (lo == hi || n == 1) Vector(lo, hi)
+      else (0 to n).map {
+        case 0 => lo
+        case `n` => hi
+        case i => math.exp(llo + i * (lhi - llo) / n)
+      }.toVector
+    vectorHistogram(clean, edges, Seq(col("x") -> "cnt"))
   }
 
   /** 2-D histogram (heatmap grid): joint counts over an `nx × ny` equal-width
@@ -495,9 +408,9 @@ object Binning {
     * the rdd.py:2350-2351 drop rule, applied per axis; each axis keeps the
     * closed-last-bucket clamp.
     *
-    * Same two-job shape as the 1-D path: one combined min/max agg for both
-    * axes, one counting pass (`groupBy(bin_x, bin_y)` hash-agg — shuffle of
-    * at most nx × ny rows), then a dense-grid spine join (tiny broadcast).
+    * One combined min/max agg for both axes, one counting pass
+    * (`groupBy(bin_x, bin_y)` hash-agg — shuffle of at most nx × ny rows),
+    * then a dense-grid spine join (tiny broadcast).
     * Degenerate axes (min == max) collapse to a single closed bucket on that
     * axis. Output: (bin_x, bin_y, x_lo, x_hi, y_lo, y_hi, cnt), dense,
     * sorted by (bin_x, bin_y). */
@@ -527,11 +440,6 @@ object Binning {
       .agg(count(lit(1)).as("cnt"))
     val grid = df.sparkSession.range(nxe).select(col("id").cast("int").as("bin_x"))
       .crossJoin(df.sparkSession.range(nye).select(col("id").cast("int").as("bin_y")))
-    // equalWidthEdges computes exactly i*step+lo, so echoing the driver-side
-    // vectors via element_at literals is bit-identical to the oracle formula
-    def edgeCols(b: Column, es: Vector[Double], loN: String, hiN: String) = Seq(
-      element_at(typedLit(es.dropRight(1)), b + 1).as(loN),
-      element_at(typedLit(es.drop(1)), b + 1).as(hiN))
     grid.join(counts, Seq("bin_x", "bin_y"), "left")
       .na.fill(0L, Seq("cnt"))
       .select(Seq(col("bin_x"), col("bin_y")) ++
@@ -548,40 +456,31 @@ object Binning {
     *
     * The weight sum aggregates as `decimal(28,6)` casts so it is
     * order-independent under any partitioning (double summation would drift
-    * with the shuffle schedule), surfaced as a double. Same two-job,
-    * n_bins-row-shuffle shape as [[histogram]]. Output: (bin_id, bin_lo,
-    * bin_hi, cnt, wsum), dense, sorted. */
+    * with the shuffle schedule), surfaced as a double. Counting is a
+    * `groupBy(bin_id)` with an n_bins-row shuffle and a spine join for the
+    * empty bins. Output: (bin_id, bin_lo, bin_hi, cnt, wsum), dense,
+    * sorted. */
   def histogramWeighted(df: DataFrame, colName: String, weightCol: String,
                         bins: Bins = Bins.Count(10),
                         range: Option[(Double, Double)] = None): DataFrame = {
     val clean = df.select(col(colName).cast("double").as("x"),
         col(weightCol).cast("double").as("w"))
       .where(col("x").isNotNull && !isnan(col("x")))
-    val es: Vector[Double] = bins match {
-      case Bins.Edges(e) => validateEdges(e); e.toVector
-      case Bins.Count(n) =>
-        val (lo, hi) = range.getOrElse(minMaxOf(clean))
-        require(lo <= hi, s"invalid range [$lo, $hi]")
-        if (lo == hi || n == 1) Vector(lo, hi) else equalWidthEdges(lo, hi, n)
-    }
-    val n = es.size - 1
+    val es = edgesOf(clean, bins, range)
     val wsum = sum(when(!isnan(col("w")), col("w")).cast("decimal(28,6)"))
       .cast("double").as("wsum")
     val inRange = clean.where(col("x") >= lit(es.head) && col("x") <= lit(es.last))
     val counts = inRange
       .groupBy(binId(col("x"), es).as("bin_id"))
       .agg(count(lit(1)).as("cnt"), wsum)
-    spine(clean, n).join(counts, Seq("bin_id"), "left")
+    spine(clean, es.size - 1).join(counts, Seq("bin_id"), "left")
       .na.fill(0L, Seq("cnt")).na.fill(0.0, Seq("wsum"))
-      .select(col("bin_id"),
-        element_at(typedLit(es.dropRight(1)), col("bin_id") + 1).as("bin_lo"),
-        element_at(typedLit(es.drop(1)), col("bin_id") + 1).as("bin_hi"),
-        col("cnt"), col("wsum"))
+      .select(Seq(col("bin_id")) ++ edgeCols(col("bin_id"), es) ++ Seq(col("cnt"), col("wsum")): _*)
       .orderBy("bin_id")
   }
 
-  /** One-job min/max over several columns of one frame (combined agg) —
-    * the reference ran 2 collect jobs PER series (SURVEY.md §3 step 2). */
+  /** Min/max over several columns of one frame in one combined agg — the
+    * reference ran 2 collect jobs PER series (SURVEY.md §3 step 2). */
   def minMax(df: DataFrame, cols: Seq[String]): DataFrame = {
     val aggs = cols.flatMap(c => Seq(
       min(col(c).cast("double")).as(s"${c}_min"),

@@ -49,9 +49,10 @@ class Histogram(bins: Bins = Bins.Count(10), range: Option[(Double, Double)] = N
     this
   }
 
-  /** Idempotent materialization (reference build(), ~L95-120). Explicit
-    * edges bypass the min/max jobs entirely (~L104); either way, one union +
-    * one counting job for all series ([[Binning.histogramManyBins]]). */
+  /** Idempotent materialization (reference build(), ~L95-120): one union
+    * of all series, counted by one aggregate ([[Binning.histogramManyBins]]).
+    * 4 Spark jobs with a data-derived range; explicit edges or range skip
+    * the min/max aggregate (~L104), leaving 2. */
   def build(): DataFrame = built.getOrElse {
     val b = Binning.histogramManyBins(series.toSeq, bins, range)
     built = Some(b)

@@ -22,7 +22,7 @@ package object dist {
     def histogramBy(valueCol: String, groupCol: String, bins: Int = 10): DataFrame =
       Binning.histogramByGroup(df, valueCol, groupCol, bins)
 
-    /** One-job min/max over several numeric columns. */
+    /** Min/max over several numeric columns in one aggregate. */
     def minMax(cols: String*): DataFrame = Binning.minMax(df, cols)
 
     /** Density points (bin centers × counts) — reference distplot data. */

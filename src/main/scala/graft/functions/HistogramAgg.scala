@@ -24,8 +24,10 @@ import org.apache.spark.sql.types._
   *
   * Bucket semantics identical to [[graft.dist.Binning.binId]]: even-width
   * fast path `min(floor((x-lo)/step), n-1)` (closed last bucket), uneven
-  * boundaries by binary search; null/NaN/out-of-range silently dropped
-  * (rdd.py:2350-2356). */
+  * boundaries by `bisect_right` under IEEE `<`, so `-0.0` and `0.0` are one
+  * value as in Python; null/NaN/out-of-range silently dropped
+  * (rdd.py:2350-2356). The degenerate pair `[v, v]` is the single closed
+  * bucket of a min == max range (rdd.py:2295-2296). */
 case class HistogramAgg(
     child: Expression,
     edges: Seq[Double],
@@ -64,10 +66,15 @@ case class HistogramAgg(
           if (n == 1) 0 // degenerate min==max bucket (rdd.py:2295-2296)
           else if (!evenStep.isNaN) math.min(((x - lo) / evenStep).toInt, n - 1)
           else {
-            // bisect_right(edges, x) - 1, clamped to the closed last bucket
-            var b = java.util.Arrays.binarySearch(edgeArr, x)
-            if (b < 0) b = -b - 2 // insertion point - 1
-            math.min(b, n - 1)
+            // bisect_right(edges, x) - 1, clamped to the closed last bucket;
+            // not Arrays.binarySearch, whose total order puts -0.0 below 0.0
+            var l = 0
+            var h = edgeArr.length
+            while (l < h) {
+              val m = (l + h) >>> 1
+              if (x < edgeArr(m)) h = m else l = m + 1
+            }
+            math.min(l - 1, n - 1)
           }
         buf(bin) += 1L
       }
@@ -104,9 +111,10 @@ case class HistogramAgg(
 
 object HistogramAgg {
   /** Column facade: `hist_counts(x, edges)` → array<long> of n dense bucket
-    * counts (aggregate function). */
+    * counts (aggregate function). Edges are strictly increasing, or the
+    * degenerate pair `[v, v]`: one closed bucket counting `x == v`. */
   def hist_counts(x: Column, edges: Seq[Double]): Column = {
-    graft.dist.Binning.validateEdges(edges)
+    if (edges.size != 2 || edges.head != edges.last) graft.dist.Binning.validateEdges(edges)
     // consumer-path tuning (r13 verdict #1): keep the hash-agg path on
     // untuned sessions — see SessionTuning
     SessionTuning.ensureActiveSession()

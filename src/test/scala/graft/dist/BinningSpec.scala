@@ -123,24 +123,70 @@ class BinningSpec extends SparkSpec {
     val df = Seq(0.0, 1.5, 2.5, 5.0, 7.5, 10.0, Double.NaN, -1.0, 11.0).toDF("v")
     def rows(h: org.apache.spark.sql.DataFrame) =
       h.collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2), r.getLong(3))).toSeq
-    // even width, data-derived range over non-NaN values: [-1, 11]
-    assert(rows(Binning.histogramOnePass(df, "v", Bins.Count(4))) ==
-      rows(Binning.histogram(df, "v", Bins.Count(4))))
+    def both(bins: Bins, range: Option[(Double, Double)] = None) = {
+      val one = rows(Binning.histogramOnePass(df, "v", bins, range))
+      assert(one == rows(Binning.histogram(df, "v", bins, range)))
+      one
+    }
+    // even width, data-derived range over non-NaN values: [-1, 11], step 3
+    assert(both(Bins.Count(4)) ==
+      Seq((0, -1.0, 2.0, 3L), (1, 2.0, 5.0, 1L), (2, 5.0, 8.0, 2L), (3, 8.0, 11.0, 2L)))
     // explicit range excludes out-of-range values
-    assert(rows(Binning.histogramOnePass(df, "v", Bins.Count(4), Some((0.0, 10.0)))) ==
-      rows(Binning.histogram(df, "v", Bins.Count(4), Some((0.0, 10.0)))))
+    assert(both(Bins.Count(4), Some((0.0, 10.0))).map(_._4) == Seq(2L, 1L, 1L, 2L))
     // uneven boundaries (bisect path), out-of-range dropped
-    assert(rows(Binning.histogramOnePass(df, "v", Bins.Edges(Seq(0.0, 1.0, 5.0, 10.0)))) ==
-      rows(Binning.histogram(df, "v", Bins.Edges(Seq(0.0, 1.0, 5.0, 10.0)))))
+    assert(both(Bins.Edges(Seq(0.0, 1.0, 5.0, 10.0))).map(_._4) == Seq(1L, 2L, 3L))
     // degenerate min==max single bucket
     val const = Seq(3.0, 3.0, 3.0).toDF("v")
-    assert(rows(Binning.histogramOnePass(const, "v", Bins.Count(5))) ==
-      rows(Binning.histogram(const, "v", Bins.Count(5))))
+    assert(rows(Binning.histogramOnePass(const, "v", Bins.Count(5))) == Seq((0, 3.0, 3.0, 3L)))
     // boundary values land per bisect_right: x==edge goes to the right bucket,
     // last bucket closed
     val edges = Seq(0.0, 5.0, 10.0)
     val b = Seq(0.0, 5.0, 10.0).toDF("v")
     assert(rows(Binning.histogramOnePass(b, "v", Bins.Edges(edges))).map(_._4) == Seq(1L, 2L))
+  }
+
+  test("signed zero: -0.0 bins like 0.0 on uneven edges (bisect_right under IEEE <)") {
+    val negZero = Seq(-0.0).toDF("v")
+    val cases = Seq(
+      Seq(-50.0, -10.0, 0.0, 1.0, 25.0, 80.0) -> Seq(0L, 0L, 1L, 0L, 0L),
+      // 0.0 is the lowest edge: -0.0 is in range and must not bisect below it
+      Seq(0.0, 1.0, 5.0, 10.0) -> Seq(1L, 0L, 0L))
+    for ((edges, want) <- cases) {
+      assert(counts(Binning.histogram(negZero, "v", Bins.Edges(edges))) == want, s"histogram $edges")
+      val built = new Histogram(Bins.Edges(edges))
+        .addColumn(negZero, "v", "a").addColumn(Seq(-0.0, 0.0).toDF("w"), "w", "b").build()
+        .orderBy("bin_id").select("a_cnt", "b_cnt").as[(Long, Long)].collect().toSeq
+      assert(built == want.map(c => (c, 2 * c)), s"Histogram.build $edges")
+      val raw = negZero.agg(graft.functions.HistogramAgg.hist_counts(col("v"), edges))
+        .as[Seq[Long]].collect()(0)
+      assert(raw == want, s"hist_counts $edges")
+    }
+    graft.functions.GraftFunctions.register(spark)
+    negZero.createOrReplaceTempView("neg_zero")
+    val sql = spark.sql("SELECT hist_counts(v, array(0.0D, 1.0D, 5.0D, 10.0D)) FROM neg_zero")
+      .as[Seq[Long]].collect()(0)
+    assert(sql == Seq(1L, 0L, 0L))
+  }
+
+  test("infinite derived bucket width raises like rdd.py:2300-2301") {
+    def refused(body: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains("Can not generate buckets with infinite value"), e.getMessage)
+    }
+    val withInf = Seq(1.0, 2.0, Double.PositiveInfinity).toDF("v")
+    refused(Binning.histogram(withInf, "v", Bins.Count(4)))
+    refused(Binning.histogramOnePass(withInf, "v", Bins.Count(4)))
+    refused(Binning.histogramColumns(withInf, Seq("v"), n = 4))
+    refused(Binning.histogram(Seq(-1.0, Double.NegativeInfinity).toDF("v"), "v", Bins.Count(2)))
+    // a finite span that overflows: 1e308 - (-1e308) is +Inf
+    refused(Binning.histogram(Seq(-1e308, 0.0, 1e308).toDF("v"), "v", Bins.Count(3)))
+    refused(Binning.equalWidthEdges(-1e308, 1e308, 3))
+    // one bin, or min == max, returns before the width is computed
+    val rows1 = Binning.histogram(withInf, "v", Bins.Count(1)).collect()
+      .map(r => (r.getDouble(1), r.getDouble(2), r.getLong(3))).toSeq
+    assert(rows1 == Seq((1.0, Double.PositiveInfinity, 3L)))
+    val infs = Seq(Double.PositiveInfinity, Double.PositiveInfinity).toDF("v")
+    assert(counts(Binning.histogram(infs, "v", Bins.Count(5))) == Seq(2L))
   }
 
   test("histogramColumns works for a single column and colliding labels dedupe safely") {

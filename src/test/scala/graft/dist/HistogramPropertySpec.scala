@@ -35,7 +35,17 @@ class HistogramPropertySpec extends SparkSpec {
     counters.take(n).toSeq
   }
 
-  private val valuesGen = Gen.nonEmptyListOf(Gen.chooseNum(-100.0, 100.0))
+  private val unevenEdges = Seq(-50.0, -10.0, 0.0, 1.0, 25.0, 80.0)
+
+  /** Finite values, salted with `-0.0` (equal to `0.0` under IEEE `<`, but
+    * ordered below it by a total order) and with exact edge values. */
+  private val finiteGen = Gen.frequency(
+    8 -> Gen.chooseNum(-100.0, 100.0), 1 -> Gen.const(-0.0), 2 -> Gen.oneOf(unevenEdges))
+  private val valuesGen = Gen.nonEmptyListOf(finiteGen)
+  /** Values for explicit edges may also be infinite: a data-derived range
+    * over them is refused (rdd.py:2300-2301), explicit edges bin them. */
+  private val edgeValuesGen = Gen.nonEmptyListOf(Gen.frequency(
+    10 -> finiteGen, 1 -> Gen.oneOf(Double.PositiveInfinity, Double.NegativeInfinity)))
   private val nBinsGen = Gen.choose(1, 12)
 
   private def samples[T](g: Gen[T], n: Int): Seq[T] =
@@ -55,26 +65,56 @@ class HistogramPropertySpec extends SparkSpec {
   }
 
   test("property: engine == literal rdd.py oracle on explicit uneven edges") {
-    val edges = Seq(-50.0, -10.0, 0.0, 1.0, 25.0, 80.0)
-    for ((vs, i) <- samples(valuesGen, 30).zipWithIndex) {
+    val infinite = Seq(Double.NegativeInfinity, -10.0, 0.0, 1.0, Double.PositiveInfinity)
+    for ((vs, i) <- samples(edgeValuesGen, 30).zipWithIndex; edges <- Seq(unevenEdges, infinite)) {
       val h = Binning.histogram(vs.toDF("v"), "v", Bins.Edges(edges))
         .orderBy("bin_id").select("cnt").as[Long].collect().toSeq
-      assert(h == oracleCounts(vs, edges), s"case $i: values=$vs")
+      assert(h == oracleCounts(vs, edges), s"case $i: edges=$edges values=$vs")
     }
   }
 
-  test("property: one-pass aggregate == groupBy formulation == rdd.py oracle") {
-    val edges = Seq(-50.0, -10.0, 0.0, 1.0, 25.0, 80.0)
-    for (((vs, n), i) <- samples(Gen.zip(valuesGen, nBinsGen), 20).zipWithIndex) {
-      val df = vs.toDF("v")
-      val viaAgg = Binning.histogramOnePass(df, "v", Bins.Count(n))
-        .orderBy("bin_id").select("cnt").as[Long].collect().toSeq
-      val viaGroupBy = Binning.histogram(df, "v", Bins.Count(n))
-        .orderBy("bin_id").select("cnt").as[Long].collect().toSeq
-      assert(viaAgg == viaGroupBy, s"case $i derived: n=$n values=$vs")
-      val unevenAgg = Binning.histogramOnePass(df, "v", Bins.Edges(edges))
-        .orderBy("bin_id").select("cnt").as[Long].collect().toSeq
-      assert(unevenAgg == oracleCounts(vs, edges), s"case $i uneven: values=$vs")
+  /** Oracle counts over data-derived equal-width edges spanning [lo, hi]:
+    * min == max or one bin is the single bucket of rdd.py:2295-2296. */
+  private def derivedCounts(vs: Seq[Double], lo: Double, hi: Double, n: Int): Seq[Long] =
+    if (lo == hi || n == 1) Seq(vs.count(x => x >= lo && x <= hi).toLong)
+    else oracleCounts(vs, Binning.equalWidthEdges(lo, hi, n))
+
+  test("property: every histogram entry point == literal rdd.py oracle") {
+    val gen = Gen.zip(valuesGen, valuesGen, nBinsGen)
+    for (((as, bs, n), i) <- samples(gen, 15).zipWithIndex) {
+      val (a, b) = (as.toDF("v"), bs.toDF("v"))
+      val (lo, hi) = ((as ++ bs).min, (as ++ bs).max)
+      val single = Binning.histogram(a, "v", Bins.Count(n)).orderBy("bin_id").select("cnt").as[Long].collect().toSeq
+      assert(single == derivedCounts(as, as.min, as.max, n), s"case $i histogram: n=$n values=$as")
+      // two series over one shared range, by count and by explicit edges
+      def wide(bins: Bins) = new Histogram(bins).addColumn(a, "v", "a").addColumn(b, "v", "b").build()
+        .orderBy("bin_id").select("a_cnt", "b_cnt").as[(Long, Long)].collect().toSeq.unzip
+      assert(wide(Bins.Count(n)) == ((derivedCounts(as, lo, hi, n), derivedCounts(bs, lo, hi, n))),
+        s"case $i build: n=$n a=$as b=$bs")
+      assert(wide(Bins.Edges(unevenEdges)) == ((oracleCounts(as, unevenEdges), oracleCounts(bs, unevenEdges))),
+        s"case $i build edges: a=$as b=$bs")
+      // groups over one shared range; the null-group row widens that range
+      // (to include 0.0) but gets no histogram of its own
+      val grouped = (as.map("a" -> _) ++ bs.map("b" -> _) :+ (null: String) -> 0.0).toDF("g", "v")
+      val byGroup = Binning.histogramByGroup(grouped, "v", "g", n)
+        .collect().groupBy(_.getString(0)).map { case (g, rs) => g -> rs.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq }
+      val (glo, ghi) = (math.min(lo, 0.0), math.max(hi, 0.0))
+      assert(byGroup == Map("a" -> derivedCounts(as, glo, ghi, n), "b" -> derivedCounts(bs, glo, ghi, n)),
+        s"case $i byGroup: n=$n a=$as b=$bs")
+      // log bins over the positive values only
+      val pos = as.filter(_ > 0)
+      if (pos.nonEmpty) {
+        val (plo, phi) = (pos.min, pos.max)
+        val expected =
+          if (plo == phi || n == 1) Seq(pos.size.toLong)
+          else oracleCounts(pos, (0 to n).map {
+            case 0 => plo
+            case `n` => phi
+            case k => math.exp(math.log(plo) + k * (math.log(phi) - math.log(plo)) / n)
+          })
+        val log = Binning.histogramLog(a, "v", n).orderBy("bin_id").select("cnt").as[Long].collect().toSeq
+        assert(log == expected, s"case $i log: n=$n values=$as")
+      }
     }
   }
 

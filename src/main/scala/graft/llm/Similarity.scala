@@ -148,11 +148,11 @@ object Similarity {
     // design occupancy, but a dense hub (many near-identical vectors — the
     // exact shape replica-heavy corpora produce) shares one sign pattern
     // at ANY bit width, so its cell grows with the hub and Σ|cell|² goes
-    // hub-quadratic. Measured at 100× bench scale (LshBucketProbe): p50
-    // occupancy 120 vs max 3269 — the tail, not the median, carried 4.5×
-    // the design pair volume. Keeping the maxBucket smallest ids per cell
-    // (deterministic) bounds per-source candidates at
-    // nTables·nProbes·maxBucket, restoring linear growth; sources are
+    // hub-quadratic. Measured at 100× bench scale (SCALE.md, "LSH
+    // kNN-graph bucket skew"): p50 occupancy 120 vs max 3269 — the tail,
+    // not the median, carried 4.5× the design pair volume. Keeping the
+    // maxBucket smallest ids per cell (deterministic) bounds per-source
+    // candidates at nTables·nProbes·maxBucket, restoring linear growth; sources are
     // never capped, so every node still receives k edges, and inside a
     // hub the kept candidates are near-ties of the excised ones (recall
     // property-tested; cap never binds at design occupancy).

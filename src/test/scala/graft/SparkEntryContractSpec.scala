@@ -105,7 +105,7 @@ class SparkEntryContractSpec extends SparkSpec {
   // carry explicit "only slim columns cross the exchange" design claims
   // (text never shuffles in dedup, k-bounded TopK partials in the LSH
   // graph, map-only predicates in sampling, hash-only rows in packing).
-  // Ceilings are ~4x the ShuffleProbe-measured sf0.001 volume (r13:
+  // Ceilings are ~4x the sf0.001 shuffle_bytes of PlanDump's [jobs] line (r13:
   // 14,985 / 108,526 / 710,640 / 2,048 / 19,625 bytes) — generous against
   // scheduler jitter, yet orders of magnitude below the failure mode this
   // guards (a text or vector column crossing an exchange multiplies the
@@ -118,12 +118,12 @@ class SparkEntryContractSpec extends SparkSpec {
     "sample_hash_documents" -> 16_000L,
     "pack_documents" -> 80_000L,
     // r14 incremental dedup faces: the registry anti-join claims 8-byte
-    // hashes on BOTH sides (ShuffleProbe sf0.001: 112,563 / 402,500 B)
+    // hashes on BOTH sides (PlanDump [jobs] sf0.001: 112,563 / 402,500 B)
     "dedup_spans_incremental_documents" -> 450_000L,
     "dedup_substrings_incremental_documents" -> 1_600_000L,
     // r15 incremental LSH near-dedup: banding/candidate exchanges carry
     // (band, bh, id) rows and the verify join shingle-hash ARRAYS of the
-    // batch + candidate reps only — text never crosses (ShuffleProbe
+    // batch + candidate reps only — text never crosses (PlanDump [jobs]
     // sf0.001: 613,658 B)
     "dedup_near_incremental_documents" -> 2_500_000L)
 
